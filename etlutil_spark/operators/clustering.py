@@ -37,7 +37,8 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column, DataFrame
-from etlutil_spark.operators.util import pin
+from etlutil_spark.operators.store import Store
+from etlutil_spark.operators.util import dataset_digest, pin
 from pyspark.sql import functions as F
 
 from etlutil_spark.functions.vectors import bigint_array_lit
@@ -664,6 +665,9 @@ def _ivfadc_query_tables(
     return tables
 
 
+_IVFADC_MODEL = "_ivfadc_model.json"
+
+
 def ensure_ivfadc_index(
     spark,
     df: DataFrame,
@@ -693,16 +697,6 @@ def ensure_ivfadc_index(
     gets one well-sized file per shuffle partition (the build_ivf_store
     writer-explosion guard); at 1e9+ vectors raise the partition count
     to a multiple of k so hot cells split across healthy files."""
-    import json
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/delta=base/_SUCCESS")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    from etlutil_spark.operators.util import dataset_digest
-
     params = {
         "id_col": id_col, "vec_col": vec_col, "k": int(k),
         "iters": int(iters), "m": int(m), "ksub": int(ksub),
@@ -717,31 +711,26 @@ def ensure_ivfadc_index(
         # same path rebuilds instead of silently serving a stale index
         "data": dataset_digest(df),
     }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(model_path):
-        # ANY failure to read or parse the meta on the reuse path (crash-
-        # truncated JSON, checksum error) falls through to rebuild — a
-        # damaged sidecar must never brick the store
-        try:
-            stream = fs.open(model_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
 
-    q = _quantized_corpus(df, id_col, vec_col, scale).transform(pin)
-    centroids = _kmeans_fit_q(q, id_col, k=k, iters=iters)
-    d = len(centroids[0])
-    if d % m != 0:
-        raise ValueError(f"vector dim {d} not divisible by m={m} subspaces")
-    dsub = d // m
+    def build(base: str) -> dict:
+        q = _quantized_corpus(df, id_col, vec_col, scale).transform(pin)
+        centroids = _kmeans_fit_q(q, id_col, k=k, iters=iters)
+        d = len(centroids[0])
+        if d % m != 0:
+            raise ValueError(f"vector dim {d} not divisible by m={m} subspaces")
+        enc = _ivfadc_residuals(q, id_col, centroids).transform(pin)
+        codebooks = _pq_train_q(enc, id_col, m=m, ksub=ksub, iters=pq_iters)
+        _write_ivfadc_codes(enc, id_col, codebooks, k, base + "/delta=base")
+        return {"centroids": centroids, "codebooks": codebooks}
+
+    return Store(spark, path, _IVFADC_MODEL, marker="delta=base/_SUCCESS").ensure(
+        params, build
+    )
+
+
+def _ivfadc_residuals(q: DataFrame, id_col: str, centroids: list[list[int]]) -> DataFrame:
+    """(id, cell, residual ``_qv``) of a quantized corpus: each vector's
+    nearest centroid and its integer offset from it."""
     cell = _best_cluster(centroids)["c"]
     cent_lit = bigint_array_lit(centroids)
     rv = F.zip_with(
@@ -749,10 +738,18 @@ def ensure_ivfadc_index(
         F.element_at(cent_lit, (cell + 1).cast("int")),
         lambda a, b: a - b,
     )
-    enc = q.select(
+    return q.select(
         F.col(id_col), cell.cast("int").alias("cell"), rv.alias("_qv")
-    ).transform(pin)
-    codebooks = _pq_train_q(enc, id_col, m=m, ksub=ksub, iters=pq_iters)
+    )
+
+
+def _write_ivfadc_codes(
+    enc: DataFrame, id_col: str, codebooks: list, n_cells: int, dest: str
+) -> None:
+    """PQ-encode the residuals and write (id, cell, codes) cell-partitioned
+    to ``dest``, overwriting it."""
+    m = len(codebooks)
+    dsub = len(codebooks[0][0])
     codes = F.array(
         *[
             _best_cluster(codebooks[s], F.slice("_qv", s * dsub + 1, dsub))[
@@ -763,18 +760,22 @@ def ensure_ivfadc_index(
     )
     (
         enc.select(F.col(id_col), F.col("cell"), codes.alias("codes"))
-        .repartition(k, "cell")
+        .repartition(n_cells, "cell")
         .write.mode("overwrite")
         .partitionBy("cell")
-        .parquet(base + "/delta=base")
+        .parquet(dest)
     )
-    model = {"params": params, "centroids": centroids, "codebooks": codebooks}
-    out = fs.create(model_path, True)
-    try:
-        out.write(bytearray(json.dumps(model, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
+
+
+def _load_ivfadc(spark, path: str, nprobe: int):
+    """(params, centroids, codebooks) of an IVFADC store's model sidecar,
+    with ``nprobe`` checked against its cell count."""
+    model = Store(spark, path, _IVFADC_MODEL).meta("ivfadc index")
+    params = model["params"]
+    k = params["k"]
+    if not 1 <= nprobe <= k:
+        raise ValueError(f"nprobe must be in [1, k], got nprobe={nprobe} k={k}")
+    return params, model["centroids"], model["codebooks"]
 
 
 def ivfadc_serve(
@@ -798,24 +799,8 @@ def ivfadc_serve(
     Bit-identical to :func:`ivfadc_topk` with the same params by
     construction: codes are assigned by the same integer argmin at
     write time, and the tables come from the shared helper."""
-    import json
-
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    fs = model_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(model_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    model = json.loads(txt)
-    params = model["params"]
-    centroids, codebooks = model["centroids"], model["codebooks"]
-    k, m, scale = params["k"], params["m"], params["scale"]
-    id_col = params["id_col"]
-    if not 1 <= nprobe <= k:
-        raise ValueError(f"nprobe must be in [1, k], got nprobe={nprobe} k={k}")
+    params, centroids, codebooks = _load_ivfadc(spark, path, nprobe)
+    m, scale, id_col = params["m"], params["scale"], params["id_col"]
     d = len(centroids[0])
     if len(query_vec) != d:
         raise ValueError(f"query dim {len(query_vec)} != index dim {d}")
@@ -874,80 +859,30 @@ def update_ivfadc_index(
     into — re-train (rebuild) when the batch distribution departs from
     the training corpus; the recall eval harness
     (dedup_minhash_recall's pattern) is the gate for that decision."""
-    import json
-    import re
 
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", str(batch_id)) or str(
-        batch_id
-    ) == "base":
-        raise ValueError(
-            f"update_ivfadc_index: invalid batch_id {batch_id!r} — must "
-            "match [A-Za-z0-9_.-]+ and must not be the reserved value 'base'"
+    def write(model: dict, dest: str) -> None:
+        params = model["params"]
+        if params.get("layout") != 2:
+            raise ValueError(
+                f"ivfadc index at {path} predates the delta-partitioned "
+                "layout; rebuild it via ensure_ivfadc_index before "
+                "incrementing (mixing layouts under one root breaks "
+                "partition discovery)"
+            )
+        centroids = model["centroids"]
+        id_col, scale = params["id_col"], params["scale"]
+        vec_col = params.get("vec_col", "embedding")
+        q = _quantized_corpus(new_docs, id_col, vec_col, scale)
+        # overwrite THIS batch's partition dir directly (not a table-level
+        # append): a retried batch replaces any partial/committed prior attempt
+        _write_ivfadc_codes(
+            _ivfadc_residuals(q, id_col, centroids), id_col,
+            model["codebooks"], len(centroids), dest,
         )
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    fs = model_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(model_path):
-        raise ValueError(f"no ivfadc index at {path}; build one first")
-    marker = jvm.org.apache.hadoop.fs.Path(base + f"/_applied_{batch_id}")
-    if fs.exists(marker):
-        return "skipped"
-    stream = fs.open(model_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    model = json.loads(txt)
-    params = model["params"]
-    if params.get("layout") != 2:
-        raise ValueError(
-            f"ivfadc index at {path} predates the delta-partitioned "
-            "layout; rebuild it via ensure_ivfadc_index before "
-            "incrementing (mixing layouts under one root breaks "
-            "partition discovery)"
-        )
-    centroids, codebooks = model["centroids"], model["codebooks"]
-    id_col, scale = params["id_col"], params["scale"]
-    m = params["m"]
-    d = len(centroids[0])
-    dsub = d // m
-    vec_col = params.get("vec_col", "embedding")
 
-    q = _quantized_corpus(new_docs, id_col, vec_col, scale)
-    cell = _best_cluster(centroids)["c"]
-    cent_lit = bigint_array_lit(centroids)
-    rv = F.zip_with(
-        "_qv",
-        F.element_at(cent_lit, (cell + 1).cast("int")),
-        lambda a, b: a - b,
+    return Store(spark, path, _IVFADC_MODEL).append_delta(
+        batch_id, write, who="update_ivfadc_index", what="ivfadc index"
     )
-    enc = q.select(
-        F.col(id_col), cell.cast("int").alias("cell"), rv.alias("_qv")
-    )
-    codes = F.array(
-        *[
-            _best_cluster(codebooks[s], F.slice("_qv", s * dsub + 1, dsub))[
-                "c"
-            ].cast("int")
-            for s in range(m)
-        ]
-    )
-    # overwrite THIS batch's partition dir directly (not a table-level
-    # append): a retried batch replaces any partial/committed prior attempt
-    (
-        enc.select(F.col(id_col), F.col("cell"), codes.alias("codes"))
-        .repartition(len(centroids), "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(base + f"/delta={batch_id}")
-    )
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(b"1"))
-    finally:
-        out.close()
-    return "applied"
 
 
 def ivfadc_serve_many(
@@ -969,26 +904,10 @@ def ivfadc_serve_many(
     for per-query TakeOrdered fan-out — the scan amortization is the
     point either way. Returns (query_id, id, adc_dist, rank <= topk),
     bit-identical per query to :func:`ivfadc_serve`."""
-    import json
-
     from pyspark.sql.window import Window
 
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    model_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivfadc_model.json")
-    fs = model_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(model_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    model = json.loads(txt)
-    params = model["params"]
-    centroids, codebooks = model["centroids"], model["codebooks"]
-    k, m, scale = params["k"], params["m"], params["scale"]
-    id_col = params["id_col"]
-    if not 1 <= nprobe <= k:
-        raise ValueError(f"nprobe must be in [1, k], got nprobe={nprobe} k={k}")
+    params, centroids, codebooks = _load_ivfadc(spark, path, nprobe)
+    m, scale, id_col = params["m"], params["scale"], params["id_col"]
     d = len(centroids[0])
     qids = sorted(queries)
     probe_pairs = []           # (qid, cell)

@@ -27,7 +27,8 @@ from pyspark.sql.window import Window
 from etlutil_spark.functions.vectors import bigint_array_lit
 from etlutil_spark.functions.hashing import md5_bigint
 from etlutil_spark.functions.text import tokens, word_shingles
-from etlutil_spark.operators.util import ensure_min_partitions, pin
+from etlutil_spark.operators.store import Store, list_versions
+from etlutil_spark.operators.util import dataset_digest, ensure_min_partitions, pin
 from etlutil_spark.functions.vectors import cosine
 
 # 2^31-ish prime for universal hashing; products stay < 2^63
@@ -889,111 +890,12 @@ def build_cluster_store(
 
 
 def _store_fs(spark, base: str):
-    """(jvm, fs, Path(base)) triple for the versioned-store helpers."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(base)
-    return jvm, p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+    """(jvm, fs, Path(base)) triple for inspecting a versioned store."""
+    st = Store(spark, base)
+    return spark._jvm, st.fs, st._p()
 
 
-def _read_small_text(jvm, fs, path_str: str) -> str | None:
-    """Read a tiny sidecar file fully; None on ANY failure (missing,
-    crash-truncated, checksum error) — callers treat that as 'absent'."""
-    try:
-        stream = fs.open(jvm.org.apache.hadoop.fs.Path(path_str))
-        try:
-            return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-    except Exception:
-        return None
-
-
-def _write_small_text(jvm, fs, path_str: str, text: str) -> None:
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path_str), True)
-    try:
-        out.write(bytearray(text.encode()))
-    finally:
-        out.close()
-
-
-def _list_store_versions(jvm, fs, base: str, meta_name: str) -> list[str]:
-    """Names of complete version dirs under ``base`` (those whose meta
-    sidecar exists), lexicographically sorted — the zero-padded counter
-    prefix in the names makes lexicographic order creation order."""
-    try:
-        statuses = list(fs.listStatus(jvm.org.apache.hadoop.fs.Path(base)))
-    except Exception:
-        return []
-    out = []
-    for st in statuses:
-        nm = st.getPath().getName()
-        if nm.startswith("v_") and st.isDirectory() and fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{base}/{nm}/{meta_name}")
-        ):
-            out.append(nm)
-    return sorted(out)
-
-
-def _resolve_store_version(spark, base: str, meta_name: str) -> str | None:
-    """Current version dir of a versioned store: follow ``_current`` if
-    it names a complete version, else fall back to the newest complete
-    version dir (covers the instant where a committer is swapping the
-    pointer file). None when no complete version exists."""
-    jvm, fs, _ = _store_fs(spark, base)
-    ptr = _read_small_text(jvm, fs, base + "/_current")
-    if ptr:
-        nm = ptr.strip()
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(f"{base}/{nm}/{meta_name}")):
-            return f"{base}/{nm}"
-    versions = _list_store_versions(jvm, fs, base, meta_name)
-    return f"{base}/{versions[-1]}" if versions else None
-
-
-def _commit_store_version(
-    spark, base: str, tmp: str, meta_name: str, keep_previous: int = 1
-) -> str:
-    """Pointer-flip commit of a fully-built version dir ``tmp``:
-    rename it to the next counter-named ``v_*`` slot under ``base``,
-    then swap the ``_current`` pointer (write-new + delete + rename —
-    readers that catch the sub-millisecond pointer gap fall back to
-    newest-complete-version, so there is NO missing-store window).
-    Old versions beyond ``keep_previous`` are deleted best-effort so an
-    in-flight reader of the PREVIOUS version keeps its files; at real
-    cluster scale raise ``keep_previous`` to cover the longest reader.
-    Returns the committed version dir path."""
-    import uuid
-
-    jvm, fs, jp = _store_fs(spark, base)
-    if not fs.exists(jp):
-        fs.mkdirs(jp)
-    versions = _list_store_versions(jvm, fs, base, meta_name)
-    next_ctr = 0
-    for nm in versions:
-        try:
-            next_ctr = max(next_ctr, int(nm.split("_")[1]) + 1)
-        except (IndexError, ValueError):
-            next_ctr = max(next_ctr, len(versions))
-    vname = f"v_{next_ctr:010d}_{uuid.uuid4().hex[:8]}"
-    vpath = f"{base}/{vname}"
-    if not fs.rename(
-        jvm.org.apache.hadoop.fs.Path(tmp), jvm.org.apache.hadoop.fs.Path(vpath)
-    ):
-        raise IOError(f"store version commit rename failed; build kept at {tmp}")
-    ptr_tmp = f"{base}/_current__tmp_{uuid.uuid4().hex[:8]}"
-    _write_small_text(jvm, fs, ptr_tmp, vname)
-    cur_p = jvm.org.apache.hadoop.fs.Path(base + "/_current")
-    if fs.exists(cur_p):
-        fs.delete(cur_p, False)
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(ptr_tmp), cur_p):
-        raise IOError(f"store pointer flip failed; version committed at {vpath}")
-    # best-effort GC: keep the new version + keep_previous older ones
-    stale = _list_store_versions(jvm, fs, base, meta_name)[: -(1 + keep_previous)]
-    for nm in stale:
-        try:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base}/{nm}"), True)
-        except Exception:
-            pass
-    return vpath
+_list_store_versions = list_versions
 
 
 _CLUSTER_META = "_cluster_meta.json"
@@ -1029,13 +931,6 @@ def ensure_cluster_store(
     without atomic rename (S3 without a committer), front this with a
     rename-capable filesystem or an external lock. Returns 'built' or
     'reused'."""
-    import json
-    import uuid
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    base = path.rstrip("/")
-    jvm, fs, _ = _store_fs(spark, base)
     params = {
         "id_col": id_col,
         "text_col": text_col,
@@ -1050,23 +945,9 @@ def ensure_cluster_store(
         "pairs_schema": 2,
         "data": dataset_digest(docs),
     }
-    cur = _resolve_store_version(spark, base, _CLUSTER_META)
-    if cur is not None:
-        # ANY failure to read or parse the meta on the reuse path falls
-        # through to rebuild — a damaged sidecar must never brick the store
-        txt = _read_small_text(jvm, fs, f"{cur}/{_CLUSTER_META}")
-        if txt:
-            try:
-                if json.loads(txt).get("params") == params:
-                    return "reused"
-            except Exception:
-                pass
-    # builder-unique temp dir: two concurrent builders never share
-    # scratch; each commits a complete private version
-    tmp = base + "__build_" + uuid.uuid4().hex[:12]
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    try:
-        build_cluster_store(
+    return Store(spark, path, _CLUSTER_META, marker=None).ensure_version(
+        params,
+        lambda tmp: build_cluster_store(
             docs,
             tmp,
             id_col=id_col,
@@ -1074,32 +955,15 @@ def ensure_cluster_store(
             n=n,
             threshold=threshold,
             max_shingle_freq=max_shingle_freq,
-        )
-        _write_small_text(
-            jvm,
-            fs,
-            f"{tmp}/{_CLUSTER_META}",
-            json.dumps({"params": params}, sort_keys=True),
-        )
-    except BaseException:
-        # a failed build must not leak its scratch dir
-        try:
-            fs.delete(tmp_p, True)
-        except Exception:
-            pass
-        raise
-    _commit_store_version(spark, base, tmp, _CLUSTER_META)
-    return "built"
+        ),
+    )
 
 
-def _cluster_store_data_dir(spark, path: str) -> str:
-    """Resolve a cluster-store path to the directory holding pairs/ and
-    clusters/: the current version of a versioned store, or the path
-    itself for a store written directly by :func:`build_cluster_store`
-    (legacy flat layout)."""
-    base = path.rstrip("/")
-    cur = _resolve_store_version(spark, base, _CLUSTER_META)
-    return cur if cur is not None else base
+def _store_data_dir(spark, path: str, meta: str) -> str:
+    """Resolve a versioned store's path to the directory holding its
+    tables: the current version, or the path itself for a store written
+    directly by its ``build_*`` function (legacy flat layout)."""
+    return Store(spark, path, meta, marker=None).data_dir()
 
 
 def read_cluster_pairs(spark, path: str) -> DataFrame:
@@ -1107,13 +971,13 @@ def read_cluster_pairs(spark, path: str) -> DataFrame:
     jaccard; schema v2) — every capped candidate pair at threshold 0.0;
     filter ``jaccard >= t`` (or derive containment from the raw stats)
     for any downstream threshold (the predicate pushes to the scan)."""
-    return spark.read.parquet(_cluster_store_data_dir(spark, path) + "/pairs")
+    return spark.read.parquet(_store_data_dir(spark, path, _CLUSTER_META) + "/pairs")
 
 
 def read_cluster_map(spark, path: str) -> DataFrame:
     """The store's cluster map (member_id, cluster_id) — the connected
     components of the verified pairs at the store's build threshold."""
-    return spark.read.parquet(_cluster_store_data_dir(spark, path) + "/clusters")
+    return spark.read.parquet(_store_data_dir(spark, path, _CLUSTER_META) + "/clusters")
 
 
 # ---------------------------------------------------------------------------
@@ -1196,13 +1060,6 @@ def ensure_minhash_store(
     (params + dataset content digest keyed, damaged-sidecar rebuild,
     reader-safe commit, previous version retained, failed builds clean
     their scratch). Returns 'built' or 'reused'."""
-    import json
-    import uuid
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    base = path.rstrip("/")
-    jvm, fs, _ = _store_fs(spark, base)
     params = {
         "id_col": id_col,
         "text_col": text_col,
@@ -1211,19 +1068,9 @@ def ensure_minhash_store(
         "bands": int(bands),
         "data": dataset_digest(docs),
     }
-    cur = _resolve_store_version(spark, base, _MINHASH_META)
-    if cur is not None:
-        txt = _read_small_text(jvm, fs, f"{cur}/{_MINHASH_META}")
-        if txt:
-            try:
-                if json.loads(txt).get("params") == params:
-                    return "reused"
-            except Exception:
-                pass
-    tmp = base + "__build_" + uuid.uuid4().hex[:12]
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    try:
-        build_minhash_store(
+    return Store(spark, path, _MINHASH_META, marker=None).ensure_version(
+        params,
+        lambda tmp: build_minhash_store(
             docs,
             tmp,
             id_col=id_col,
@@ -1231,33 +1078,14 @@ def ensure_minhash_store(
             n=n,
             num_hashes=num_hashes,
             bands=bands,
-        )
-        _write_small_text(
-            jvm,
-            fs,
-            f"{tmp}/{_MINHASH_META}",
-            json.dumps({"params": params}, sort_keys=True),
-        )
-    except BaseException:
-        try:
-            fs.delete(tmp_p, True)
-        except Exception:
-            pass
-        raise
-    _commit_store_version(spark, base, tmp, _MINHASH_META)
-    return "built"
-
-
-def _minhash_store_data_dir(spark, path: str) -> str:
-    base = path.rstrip("/")
-    cur = _resolve_store_version(spark, base, _MINHASH_META)
-    return cur if cur is not None else base
+        ),
+    )
 
 
 def read_minhash_signatures(spark, path: str) -> DataFrame:
     """The store's signature table (id, signature array<bigint>)."""
     return spark.read.parquet(
-        _minhash_store_data_dir(spark, path) + "/signatures"
+        _store_data_dir(spark, path, _MINHASH_META) + "/signatures"
     )
 
 
@@ -1265,7 +1093,7 @@ def read_minhash_cands(spark, path: str) -> DataFrame:
     """The store's verified candidate pairs (id_a, id_b, jaccard) — every
     banding candidate at the store's config; filter ``jaccard >= t`` for
     any downstream verify threshold (the predicate pushes to the scan)."""
-    return spark.read.parquet(_minhash_store_data_dir(spark, path) + "/cands")
+    return spark.read.parquet(_store_data_dir(spark, path, _MINHASH_META) + "/cands")
 
 
 def containment_pairs(

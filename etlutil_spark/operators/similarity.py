@@ -19,7 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from etlutil_spark.functions.vectors import cosine_lit, dot, norm
-from etlutil_spark.operators.util import ensure_min_partitions
+from etlutil_spark.operators.store import Store
+from etlutil_spark.operators.util import dataset_digest, ensure_min_partitions
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -305,16 +306,6 @@ def ensure_ivf_store(
     _ivf_meta.json is reused metadata-free; a param mismatch or partial
     write rebuilds. build_ivf_store itself stays overwrite-always for
     callers that want the write path exercised per run."""
-    import json
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_ivf_meta.json")
-    from etlutil_spark.operators.util import dataset_digest
-
     params = {
         "id_col": id_col, "vec_col": vec_col,
         "n_planes": int(n_planes), "seed": int(seed),
@@ -322,34 +313,13 @@ def ensure_ivf_store(
         # same path rebuilds instead of silently serving a stale store
         "data": dataset_digest(docs),
     }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        # ANY failure to read or parse the meta on the reuse path (crash-
-        # truncated JSON, checksum error) falls through to rebuild — a
-        # damaged sidecar must never brick the store
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
-    build_ivf_store(
-        docs, path, id_col=id_col, vec_col=vec_col,
-        n_planes=n_planes, seed=seed,
+    return Store(spark, path, "_ivf_meta.json").ensure(
+        params,
+        lambda base: build_ivf_store(
+            docs, path, id_col=id_col, vec_col=vec_col,
+            n_planes=n_planes, seed=seed,
+        ),
     )
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({"params": params}, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
 
 
 def ivf_topk(

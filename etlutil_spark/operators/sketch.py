@@ -32,7 +32,8 @@ family (reference ``data_structures.py:1336-1353``) to aggregate land.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from etlutil_spark.operators.util import pin
+from etlutil_spark.operators.store import Store
+from etlutil_spark.operators.util import dataset_digest, pin
 from pyspark.sql import functions as F
 
 from etlutil_spark.functions.vectors import bigint_array_lit
@@ -517,10 +518,7 @@ def histogram_quantiles(
 # ---------------------------------------------------------------------------
 
 
-def _hist_fs(spark, path: str):
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jp.getFileSystem(spark._jsc.hadoopConfiguration())
+_HIST_META = "_hist_meta.json"
 
 
 def _hist_delta(
@@ -563,40 +561,16 @@ def ensure_hist_store(
     Concurrent builders against one path still race — serialize
     externally or use per-run paths. Returns 'built', 'rebased', or
     'reused'."""
-    import json
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    jp = jvm.org.apache.hadoop.fs.Path(base)
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
+    st = Store(spark, path, _HIST_META)
     params = {
         "value_col": value_col,
         "bounds": [int(b) for b in bounds],
         "key_col": key_col,
         "data": dataset_digest(df),
     }
-    stored = None
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        # ANY failure to read or parse the meta on the reuse path —
-        # truncated JSON from a crash mid-write, a checksum error on a
-        # hand-touched local file — must fall through to rebuild, never
-        # brick the store
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            stored = json.loads(txt).get("params")
-            if stored == params:
-                return "reused"
-        except Exception:
-            stored = None
+    stored = st.stored_params()
+    if stored == params:
+        return "reused"
     if (
         isinstance(stored, dict)
         and {k: v for k, v in stored.items() if k != "data"}
@@ -609,27 +583,19 @@ def ensure_hist_store(
         # re-enters this path on retry
         _hist_delta(df, value_col, bounds, key_col).repartition(1).write.mode(
             "overwrite"
-        ).parquet(base + "/delta=base")
-        out = fs.create(meta_path, True)
-        try:
-            out.write(bytearray(json.dumps({"params": params}), "utf-8"))
-        finally:
-            out.close()
+        ).parquet(st.base + "/delta=base")
+        st.write_meta({"params": params}, sort_keys=False)
         return "rebased"
-    if fs.exists(jp):
-        fs.delete(jp, True)
-    hist = _hist_delta(df, value_col, bounds, key_col).withColumn(
-        "delta", F.lit("base")
-    )
-    hist.repartition(1).write.partitionBy("delta").mode("overwrite").parquet(
-        base
-    )
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({"params": params}), "utf-8"))
-    finally:
-        out.close()
-    return "built"
+
+    def build(base: str) -> None:
+        hist = _hist_delta(df, value_col, bounds, key_col).withColumn(
+            "delta", F.lit("base")
+        )
+        hist.repartition(1).write.partitionBy("delta").mode("overwrite").parquet(
+            base
+        )
+
+    return st.rebuild(params, build, built="built", sort_keys=False)
 
 
 def update_hist_store(
@@ -649,48 +615,19 @@ def update_hist_store(
     and the ``_applied_<batch_id>`` marker (written LAST) short-circuits
     clean replays, so at-least-once delivery cannot double-count.
     Returns 'applied' or 'skipped'."""
-    import json
-    import re
 
-    # the delta write targets <path>/delta=<batch_id> directly, so the id
-    # must be a safe single path segment — and never 'base', which would
-    # overwrite the store's own base histogram
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", str(batch_id)) or str(
-        batch_id
-    ) == "base":
-        raise ValueError(
-            f"update_hist_store: invalid batch_id {batch_id!r} — must match "
-            "[A-Za-z0-9_.-]+ and must not be the reserved value 'base'"
-        )
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
-    if not fs.exists(meta_path):
-        raise ValueError(f"no histogram store at {path}; build one first")
-    marker = jvm.org.apache.hadoop.fs.Path(base + f"/_applied_{batch_id}")
-    if fs.exists(marker):
-        return "skipped"
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    params = json.loads(txt)["params"]
-    delta = _hist_delta(
-        new_rows, params["value_col"], params["bounds"], params.get("key_col")
+    def write(meta: dict, dest: str) -> None:
+        params = meta["params"]
+        # overwrite THIS batch's partition dir directly (not a table-level
+        # append): the partition value comes from the directory name, and a
+        # retried batch replaces any partial/committed prior attempt
+        _hist_delta(
+            new_rows, params["value_col"], params["bounds"], params.get("key_col")
+        ).repartition(1).write.mode("overwrite").parquet(dest)
+
+    return Store(spark, path, _HIST_META).append_delta(
+        batch_id, write, who="update_hist_store", what="histogram store"
     )
-    # overwrite THIS batch's partition dir directly (not a table-level
-    # append): the partition value comes from the directory name, and a
-    # retried batch replaces any partial/committed prior attempt
-    delta.repartition(1).write.mode("overwrite").parquet(
-        base + f"/delta={batch_id}"
-    )
-    out = fs.create(marker, True)
-    try:
-        out.write(bytearray(b"1"))
-    finally:
-        out.close()
-    return "applied"
 
 
 def read_hist_store(spark, path: str) -> DataFrame:
@@ -704,21 +641,10 @@ def read_hist_store(spark, path: str) -> DataFrame:
     read is |deltas| x |keys| x |occupied buckets| rows — sketch-scale,
     never corpus-scale; compact periodically by folding old deltas into
     a new base if delta count ever matters."""
-    import json
-
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
-    if not fs.exists(meta_path):
-        raise ValueError(f"no histogram store at {path}; build one first")
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    params = json.loads(txt)["params"]
+    st = Store(spark, path, _HIST_META)
+    params = st.meta("histogram store")["params"]
     keys = (["key"] if params.get("key_col") else []) + ["bucket", "lo"]
-    df = spark.read.parquet(base)
+    df = spark.read.parquet(st.base)
     expected = set(keys) | {"c", "delta"}
     unexpected = [c for c in df.columns if c not in expected]
     missing = [c for c in expected if c not in df.columns]
@@ -761,46 +687,22 @@ def compact_hist_store(spark, path: str) -> str:
     plain-directory honesty caveat shared with the postings store; use a
     table format for transactional compaction. Applied-batch markers are
     re-stamped so already-folded batch_ids stay absorbed on replay."""
-    import json
-
-    jvm, fs = _hist_fs(spark, path)
-    base = path.rstrip("/")
-    jp = jvm.org.apache.hadoop.fs.Path(base)
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_hist_meta.json")
-    if not fs.exists(meta_path):
-        raise ValueError(f"no histogram store at {path}; build one first")
-    stream = fs.open(meta_path)
-    try:
-        meta_txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
+    st = Store(spark, path, _HIST_META)
+    meta = st.meta("histogram store")
     applied = [
-        st.getPath().getName()
-        for st in fs.listStatus(jp)
-        if st.getPath().getName().startswith("_applied_")
+        f.getPath().getName()
+        for f in st.listdir()
+        if f.getPath().getName().startswith("_applied_")
     ]
-    folded = read_hist_store(spark, base).withColumn("delta", F.lit("base"))
-    tmp = base + "__compact_tmp"
-    tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
-    if fs.exists(tmp_p):
-        fs.delete(tmp_p, True)
+    folded = read_hist_store(spark, st.base).withColumn("delta", F.lit("base"))
+    tmp = st.base + "__compact_tmp"
     folded.repartition(1).write.partitionBy("delta").mode("overwrite").parquet(
         tmp
     )
-    fs.delete(jp, True)
-    if not fs.rename(tmp_p, jp):
-        raise IOError(f"compact swap failed; data preserved at {tmp}")
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(meta_txt, "utf-8"))
-    finally:
-        out.close()
+    st.swap_in(tmp)
+    st.write_meta(meta, sort_keys=False)
     for name in applied:
-        m = fs.create(jvm.org.apache.hadoop.fs.Path(base + "/" + name), True)
-        try:
-            m.write(bytearray(b"1"))
-        finally:
-            m.close()
+        st.write_text(name, "1")
     return "compacted"
 
 

@@ -8,8 +8,11 @@ carries a DuckDB oracle.
 
 from __future__ import annotations
 
+import inspect
+
 from pyspark.sql import DataFrame
-from etlutil_spark.operators.util import pin
+from etlutil_spark.operators.store import Store
+from etlutil_spark.operators.util import dataset_digest, pin
 from pyspark.sql import functions as F
 
 from etlutil_spark.functions import text as X
@@ -752,6 +755,9 @@ def dsir_log_weights(
     )
 
 
+_POSTINGS_META = "_postings_meta.json"
+
+
 def ensure_postings_store(
     spark,
     df: DataFrame,
@@ -785,16 +791,6 @@ def ensure_postings_store(
     postings and corpus counts). The bucket predicate still prunes at
     the file index (bucket is a partition column at every delta
     level)."""
-    import json
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/delta=base/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    from etlutil_spark.operators.util import dataset_digest
-
     params = {
         "id_col": id_col,
         "text_col": text_col,
@@ -808,25 +804,24 @@ def ensure_postings_store(
         # silently serving a stale index
         "data": dataset_digest(df),
     }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        # ANY failure to read or parse the meta on the reuse path (crash-
-        # truncated JSON, checksum error) falls through to rebuild — a
-        # damaged sidecar must never brick the store
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
+    # deltas: per-batch corpus-count contributions, keyed by batch_id so
+    # a replayed increment OVERWRITES its own entry instead of adding a
+    # second one (idempotent, like its delta partition)
+    return Store(spark, path, _POSTINGS_META, marker="delta=base/_SUCCESS").ensure(
+        params,
+        lambda base: {
+            **_write_postings(df, base + "/delta=base", id_col, text_col, n_buckets),
+            "deltas": {},
+        },
+    )
 
+
+def _write_postings(
+    df: DataFrame, dest: str, id_col: str, text_col: str, n_buckets: int
+) -> dict:
+    """Tokenize ``df`` once and write its bucket-partitioned postings
+    (term, doc, tf, dl) to ``dest``, overwriting it; returns the batch's
+    exact corpus counts. Shared by the base build and every increment."""
     from etlutil_spark.functions.hashing import md5_bigint
 
     stats = df.select(
@@ -852,23 +847,9 @@ def ensure_postings_store(
         postings.repartition(n_buckets, "bucket")
         .write.mode("overwrite")
         .partitionBy("bucket")
-        .parquet(base + "/delta=base")
+        .parquet(dest)
     )
-    meta = {
-        "params": params,
-        "n_docs": int(stats["n_docs"]),
-        "sum_dl": int(stats["sum_dl"] or 0),
-        # per-batch corpus-count contributions, keyed by batch_id so a
-        # replayed increment OVERWRITES its own entry instead of adding
-        # a second one (idempotent, like its delta partition)
-        "deltas": {},
-    }
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps(meta, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
+    return {"n_docs": int(stats["n_docs"]), "sum_dl": int(stats["sum_dl"] or 0)}
 
 
 def _postings_corpus_stats(meta: dict) -> tuple[int, int]:
@@ -903,25 +884,35 @@ def bm25_serve(
     (same idf/contribution expressions, 9-decimal quantized DECIMAL
     sum, 6-decimal final round, doc-id tiebreak), so the same oracle
     verifies both the search math AND the store roundtrip."""
-    import hashlib
-    import json
+    terms = [t.lower() for t in query_terms]
+    id_col, postings, dfreq, contrib = _bm25_scan(
+        spark, path, terms, k1, b, "bm25_serve"
+    )
+    scored = (
+        postings.join(F.broadcast(dfreq), "term")
+        .withColumn("contrib", F.round(contrib, 9).cast("decimal(38,9)"))
+        .groupBy(id_col)
+        .agg(
+            F.round(F.sum("contrib").cast("double"), 6).alias("bm25"),
+            F.count("*").alias("n_matched_terms"),
+        )
+    )
+    return scored.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(k)
 
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    fs = meta_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    meta = json.loads(txt)
+
+def _bm25_scan(spark, path: str, terms: list[str], k1: float, b: float, who: str):
+    """(id_col, postings, doc_freq, per-row BM25 contribution) for
+    ``terms`` over a postings store: corpus constants come from the
+    sidecar (driver-side, two ints) and the scan lists ONLY the bucket
+    directories the terms hash to (same portable md5 as the writer)."""
+    import hashlib
+
+    meta = Store(spark, path, _POSTINGS_META).meta("postings store")
     n_buckets = meta["params"]["n_buckets"]
     id_col = meta["params"]["id_col"]
     n_docs, sum_dl = _postings_corpus_stats(meta)
     if n_docs == 0:
-        raise ValueError("bm25_serve: empty postings store")
-    terms = [t.lower() for t in query_terms]
+        raise ValueError(f"{who}: empty postings store")
     probes = sorted(
         {
             int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % n_buckets
@@ -950,16 +941,7 @@ def bm25_serve(
         * (k1 + 1.0)
         / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
     )
-    scored = (
-        postings.join(F.broadcast(dfreq), "term")
-        .withColumn("contrib", F.round(contrib, 9).cast("decimal(38,9)"))
-        .groupBy(id_col)
-        .agg(
-            F.round(F.sum("contrib").cast("double"), 6).alias("bm25"),
-            F.count("*").alias("n_matched_terms"),
-        )
-    )
-    return scored.orderBy(F.col("bm25").desc(), F.col(id_col).asc()).limit(k)
+    return id_col, postings, dfreq, contrib
 
 
 def update_postings_store(
@@ -989,90 +971,24 @@ def update_postings_store(
     ``_applied_<batch_id>`` marker (written LAST) merely short-circuits
     clean replays. A crash at any point leaves a retry that converges
     to exactly one application."""
-    import json
-    import re
 
-    # the delta write targets <path>/delta=<batch_id> directly, so the id
-    # must be a safe single path segment — and never 'base', which would
-    # overwrite the store's own base postings
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", str(batch_id)) or str(
-        batch_id
-    ) == "base":
-        raise ValueError(
-            f"update_postings_store: invalid batch_id {batch_id!r} — must "
-            "match [A-Za-z0-9_.-]+ and must not be the reserved value 'base'"
+    def write(meta: dict, dest: str) -> dict:
+        if "deltas" not in meta:
+            raise ValueError(
+                f"postings store at {path} predates the delta-partitioned "
+                "layout; rebuild it via ensure_postings_store before "
+                "incrementing (mixing layouts under one root breaks "
+                "partition discovery)"
+            )
+        p = meta["params"]
+        meta["deltas"][str(batch_id)] = _write_postings(
+            new_docs, dest, p["id_col"], p["text_col"], p["n_buckets"]
         )
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    fs = meta_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(meta_path):
-        raise ValueError(f"no postings store at {path}; build one first")
-    marker = jvm.org.apache.hadoop.fs.Path(base + f"/_applied_{batch_id}")
-    if fs.exists(marker):
-        return "skipped"
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    meta = json.loads(txt)
-    if "deltas" not in meta:
-        raise ValueError(
-            f"postings store at {path} predates the delta-partitioned "
-            "layout; rebuild it via ensure_postings_store before "
-            "incrementing (mixing layouts under one root breaks "
-            "partition discovery)"
-        )
-    id_col = meta["params"]["id_col"]
-    text_col = meta["params"]["text_col"]
-    n_buckets = meta["params"]["n_buckets"]
+        return meta
 
-    from etlutil_spark.functions.hashing import md5_bigint
-
-    stats = new_docs.select(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(X.token_count(text_col).cast("bigint"))
-        .cast("bigint")
-        .alias("sum_dl"),
-    ).collect()[0]
-    postings = (
-        new_docs.select(
-            F.col(id_col),
-            X.token_count(text_col).alias("dl"),
-            F.explode(X.tokens(text_col)).alias("term"),
-        )
-        .groupBy(id_col, "dl", "term")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .withColumn(
-            "bucket",
-            F.pmod(md5_bigint("term"), F.lit(n_buckets)).cast("int"),
-        )
+    return Store(spark, path, _POSTINGS_META).append_delta(
+        batch_id, write, who="update_postings_store", what="postings store"
     )
-    # overwrite THIS batch's partition dir directly (not a table-level
-    # append): the delta value comes from the directory name, and a
-    # retried batch replaces any partial/committed prior attempt
-    (
-        postings.repartition(n_buckets, "bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(base + f"/delta={batch_id}")
-    )
-    meta["deltas"][str(batch_id)] = {
-        "n_docs": int(stats["n_docs"]),
-        "sum_dl": int(stats["sum_dl"] or 0),
-    }
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps(meta, sort_keys=True).encode()))
-    finally:
-        out.close()
-    out2 = fs.create(marker, True)
-    try:
-        out2.write(bytearray(b"1"))
-    finally:
-        out2.close()
-    return "applied"
 
 
 def bm25_serve_many(
@@ -1095,52 +1011,16 @@ def bm25_serve_many(
     across the batch. Scoring math is bm25_serve's bit for bit; returns
     (query_id, doc_id, bm25, n_matched_terms, rank<=k), ranked ties
     broken by doc id."""
-    import hashlib
-    import json
-
     from pyspark.sql.window import Window
 
-    jvm = spark._jvm
-    base = path.rstrip("/")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_postings_meta.json")
-    fs = meta_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    stream = fs.open(meta_path)
-    try:
-        txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-    finally:
-        stream.close()
-    meta = json.loads(txt)
-    n_buckets = meta["params"]["n_buckets"]
-    id_col = meta["params"]["id_col"]
-    n_docs, sum_dl = _postings_corpus_stats(meta)
-    if n_docs == 0:
-        raise ValueError("bm25_serve_many: empty postings store")
     pairs = sorted(
         {(qid, t.lower()) for qid, ts in queries.items() for t in ts}
     )
     terms = sorted({t for _, t in pairs})
-    probes = sorted(
-        {
-            int(hashlib.md5(t.encode()).hexdigest()[:15], 16) % n_buckets
-            for t in terms
-        }
+    id_col, postings, dfreq, contrib = _bm25_scan(
+        spark, path, terms, k1, b, "bm25_serve_many"
     )
-    avgdl = float(sum_dl) / n_docs
     qmap = spark.createDataFrame(pairs, "query_id string, term string")
-    postings = (
-        spark.read.parquet(path)
-        .where(F.col("bucket").isin(probes))
-        .where(F.col("term").isin(terms))
-    )
-    dfreq = postings.groupBy("term").agg(F.count("*").alias("doc_freq"))
-    idf = F.log(
-        1.0 + (F.lit(n_docs) - F.col("doc_freq") + 0.5) / (F.col("doc_freq") + 0.5)
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl)))
-    )
     scored = (
         postings.join(F.broadcast(qmap), "term")
         .join(F.broadcast(dfreq), "term")
@@ -1224,63 +1104,36 @@ def ensure_quality_store(
     ``_quality_meta.json`` sidecar; a param or data change (or a
     file-less input's per-call sentinel digest) rebuilds; a damaged
     sidecar rebuilds rather than bricking."""
-    import json
-
-    from etlutil_spark.operators.util import dataset_digest
-
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/_SUCCESS")
-    meta_path = jvm.org.apache.hadoop.fs.Path(base + "/_quality_meta.json")
     w = {**DEFAULT_QUALITY_WEIGHTS, **(weights or {})}
+    gopher = inspect.signature(gopher_quality_filter).parameters.values()
     params = {
         "id_col": id_col,
         "text_col": text_col,
         "weights": {k: float(v) for k, v in sorted(w.items())},
         "threshold": float(threshold),
-        # gopher verdict at the operator's default thresholds — part of
-        # the contract so a default change rebuilds instead of serving
-        # verdicts from an older rule set
-        "gopher_defaults": [30, 10000, 3.0, 10.0, 0.03, 0.6, "en"],
+        # gopher verdict at the operator's default thresholds, read from
+        # its signature — part of the contract so a default change
+        # rebuilds instead of serving verdicts from an older rule set
+        "gopher_defaults": [p.default for p in gopher if p.kind is p.KEYWORD_ONLY],
         "schema": 1,
         "data": dataset_digest(df),
     }
-    if fs.exists(jp) and fs.exists(marker) and fs.exists(meta_path):
-        try:
-            stream = fs.open(meta_path)
-            try:
-                txt = jvm.org.apache.commons.io.IOUtils.toString(
-                    stream, "UTF-8"
-                )
-            finally:
-                stream.close()
-            if json.loads(txt).get("params") == params:
-                return "reused"
-        except Exception:
-            pass
-    if fs.exists(jp):
-        fs.delete(jp, True)
-    scored = gopher_quality_filter(
-        quality_model_score(df, text_col, weights=weights, threshold=threshold),
-        text_col,
-    ).select(
-        F.col(id_col),
-        "source",
-        "lang",
-        "n_chars",
-        "model_score",
-        "kept",
-        F.col("keep").alias("gopher_keep"),
-    )
-    scored.write.mode("overwrite").parquet(base)
-    out = fs.create(meta_path, True)
-    try:
-        out.write(bytearray(json.dumps({"params": params}, sort_keys=True).encode()))
-    finally:
-        out.close()
-    return "written"
+
+    def build(base: str) -> None:
+        gopher_quality_filter(
+            quality_model_score(df, text_col, weights=weights, threshold=threshold),
+            text_col,
+        ).select(
+            F.col(id_col),
+            "source",
+            "lang",
+            "n_chars",
+            "model_score",
+            "kept",
+            F.col("keep").alias("gopher_keep"),
+        ).write.mode("overwrite").parquet(base)
+
+    return Store(spark, path, "_quality_meta.json").ensure(params, build)
 
 
 def read_quality_scores(spark, path: str) -> DataFrame:

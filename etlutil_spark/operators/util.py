@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from etlutil_spark.operators.store import Store
+
 
 def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition ONLY when the input has fewer partitions
@@ -115,8 +117,6 @@ def dataset_digest(df: DataFrame) -> str:
     from collections import defaultdict
 
     spark = df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     by_dir: dict[str, set[str]] = defaultdict(set)
     input_files = df.inputFiles()
     if not input_files:
@@ -135,20 +135,14 @@ def dataset_digest(df: DataFrame) -> str:
     h = hashlib.md5()
     entries: list[str] = []
     for parent, names in by_dir.items():
-        p = jvm.org.apache.hadoop.fs.Path(parent)
-        fs = p.getFileSystem(conf)
         seen: dict[str, str] = {}
-        try:
-            statuses = list(fs.listStatus(p))
-        except Exception:
-            # The input directory vanished between plan and digest (dataset
-            # deleted or mid-regeneration). Every file in it reads as
-            # 'missing' — a digest CHANGE — so the ensure_* reuse check
-            # falls through to rebuild instead of propagating an opaque
-            # JVM error out of a warm read: a damaged input must never
-            # brick the store.
-            statuses = []
-        for st in statuses:
+        # An input directory that vanished between plan and digest (dataset
+        # deleted or mid-regeneration) lists as empty: every file in it
+        # reads as 'missing' — a digest CHANGE — so the ensure_* reuse
+        # check falls through to rebuild instead of propagating an opaque
+        # JVM error out of a warm read: a damaged input must never brick
+        # the store.
+        for st in Store(spark, parent).listdir():
             nm = st.getPath().getName()
             if nm in names:
                 seen[nm] = f"{st.getLen()}|{st.getModificationTime()}"
@@ -193,3 +187,12 @@ def store_root(spark=None) -> str:
     except Exception:
         pass
     return tempfile.gettempdir()
+
+
+def store_path(spark, kind: str, sf_dir: str) -> str:
+    """The query layer's location for one ``kind`` of store built from the
+    dataset at ``sf_dir``: ``<store_root>/etlutil_spark_<kind>_<sf_dir
+    with '/' -> '_'>``, one directory per (kind, dataset)."""
+    return f"{store_root(spark)}/etlutil_spark_{kind}_" + sf_dir.strip("/").replace(
+        "/", "_"
+    )

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from etlutil_spark.functions import dates as D
 from etlutil_spark.functions.daterange import DateRange, DateRanges
 from etlutil_spark.functions.vectors import bigint_array_lit, double_array_lit
-from etlutil_spark.operators.util import pin, store_root
+from etlutil_spark.operators.util import pin, store_path, store_root
 from etlutil_spark.sources.testdata import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -2906,10 +2906,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, "embeddings", sf_dir)
     qvec = [float(x) for x in e.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]]
-    path = (
-        f"{store_root(spark)}/etlutil_spark_ivf_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "ivf", sf_dir)
     build_ivf_store(e, path, n_planes=6)
     return ivf_topk(
         spark, path, qvec, k=10, n_planes=6, multiprobe_hamming=1
@@ -4590,10 +4587,7 @@ def docs_bm25_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_postings_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "postings", sf_dir)
     ensure_postings_store(spark, d, path, id_col="doc_id", text_col="text")
     return bm25_serve(spark, path, ["vector", "join", "stream"], k=20)
 
@@ -4656,10 +4650,7 @@ def docs_bm25_serve_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, "documents", sf_dir)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_postings_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "postings", sf_dir)
     ensure_postings_store(spark, d, path, id_col="doc_id", text_col="text")
     return bm25_serve_many(
         spark,
@@ -4721,10 +4712,7 @@ def docs_bm25_serve_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, "documents", sf_dir)
     base = d.where(F.col("doc_id") % 3 != 0)
     batch = d.where(F.col("doc_id") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_postings_inc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "postings_inc", sf_dir)
     ensure_postings_store(spark, base, path, id_col="doc_id", text_col="text")
     update_postings_store(spark, batch, path, batch_id="mod3")
     return bm25_serve(spark, path, ["vector", "join", "stream"], k=20)
@@ -10447,10 +10435,7 @@ def io_partition_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
         .withColumn("day", F.date_format("ts", "yyyy-MM-dd"))
     )
-    path = (
-        f"{store_root(spark)}/etlutil_spark_events_byday_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "events_byday", sf_dir)
     write_partitioned(e, path, partition_by=["day"], files_per_partition=2)
     r = spark.read.parquet(path).where(
         F.col("day").between("2024-01-08", "2024-01-14")
@@ -11679,9 +11664,8 @@ def docs_retrieval_pipeline_serve(spark: SparkSession, sf_dir: str) -> DataFrame
         .select("embedding")
         .collect()[0][0]
     ]
-    sfx = sf_dir.strip("/").replace("/", "_")
-    p_path = f"{store_root(spark)}/etlutil_spark_postings_{sfx}"
-    v_path = f"{store_root(spark)}/etlutil_spark_ivfserve_{sfx}"
+    p_path = store_path(spark, "postings", sf_dir)
+    v_path = store_path(spark, "ivfserve", sf_dir)
     ensure_postings_store(spark, d, p_path, id_col="doc_id", text_col="text")
     ensure_ivf_store(spark, e, v_path, n_planes=6)
     lex = bm25_serve(spark, p_path, ["vector", "join", "stream"], k=20).select(
@@ -11756,9 +11740,8 @@ def docs_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("embedding")
         .collect()[0][0]
     ]
-    sfx = sf_dir.strip("/").replace("/", "_")
-    p_path = f"{store_root(spark)}/etlutil_spark_postings_{sfx}"
-    v_path = f"{store_root(spark)}/etlutil_spark_ivfserve_{sfx}"
+    p_path = store_path(spark, "postings", sf_dir)
+    v_path = store_path(spark, "ivfserve", sf_dir)
     ensure_postings_store(spark, d, p_path, id_col="doc_id", text_col="text")
     ensure_ivf_store(spark, e, v_path, n_planes=6)
     lex = bm25_serve(spark, p_path, ["vector", "join", "stream"], k=20)
@@ -12600,10 +12583,7 @@ def io_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
     -> aggregate chain lossless. Scratch store under TMPDIR, one
     overwrite per generation dir, idempotent per run."""
 
-    base = (
-        f"{store_root(spark)}/etlutil_spark_schemaevo_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    base = store_path(spark, "schemaevo", sf_dir)
     o = load_table(spark, "orders", sf_dir)
     v1 = o.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderpriority"
@@ -13064,10 +13044,7 @@ def sim_ivfadc_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(x)
         for x in e.where(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     ]
-    path = (
-        f"{store_root(spark)}/etlutil_spark_ivfadc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "ivfadc", sf_dir)
     ensure_ivfadc_index(
         spark, e, "vec_id", "embedding", path,
         k=8, iters=3, m=8, ksub=16, pq_iters=2,
@@ -13105,10 +13082,7 @@ def sim_ivfadc_serve_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     }
-    path = (
-        f"{store_root(spark)}/etlutil_spark_ivfadc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "ivfadc", sf_dir)
     ensure_ivfadc_index(
         spark, e, "vec_id", "embedding", path,
         k=8, iters=3, m=8, ksub=16, pq_iters=2,
@@ -13220,10 +13194,7 @@ def sim_ivfadc_serve_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     base = e.where(F.col("vec_id") % 3 != 0)
     batch = e.where(F.col("vec_id") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_ivfadc_inc_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "ivfadc_inc", sf_dir)
     ensure_ivfadc_index(
         spark, base, "vec_id", "embedding", path,
         k=8, iters=3, m=8, ksub=16, pq_iters=2,
@@ -14621,10 +14592,7 @@ def _dedup_cluster_store(spark: SparkSession, sf_dir: str) -> str:
     from etlutil_spark.operators.util import ensure_min_partitions
 
     d = ensure_min_partitions(load_table(spark, "documents", sf_dir))
-    path = (
-        f"{store_root(spark)}/etlutil_spark_clstore_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "clstore", sf_dir)
     ensure_cluster_store(
         spark,
         d,
@@ -14653,10 +14621,7 @@ def _docs_quality_store(spark: SparkSession, sf_dir: str) -> str:
     from etlutil_spark.operators.util import ensure_min_partitions
 
     d = ensure_min_partitions(load_table(spark, "documents", sf_dir))
-    path = (
-        f"{store_root(spark)}/etlutil_spark_qstore_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "qstore", sf_dir)
     ensure_quality_store(spark, d, path, id_col="doc_id", text_col="text")
     return path
 
@@ -14677,10 +14642,7 @@ def _dedup_minhash_store(spark: SparkSession, sf_dir: str) -> str:
     from etlutil_spark.operators.util import ensure_min_partitions
 
     d = ensure_min_partitions(load_table(spark, "documents", sf_dir))
-    path = (
-        f"{store_root(spark)}/etlutil_spark_mhstore_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "mhstore", sf_dir)
     ensure_minhash_store(
         spark,
         d,
@@ -16151,10 +16113,7 @@ def orders_price_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = o.where(F.col("o_orderkey") % 3 != 0)
     batch = o.where(F.col("o_orderkey") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_hist_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "hist", sf_dir)
     bounds = geometric_bounds(1_000_000, 0.05)
     ensure_hist_store(spark, base, path, value_col="v", bounds=bounds)
     update_hist_store(spark, batch, path, batch_id="mod3")
@@ -16604,10 +16563,7 @@ def events_type_quantile_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = ev.where(F.col("event_id") % 3 != 0)
     batch = ev.where(F.col("event_id") % 3 == 0)
-    path = (
-        f"{store_root(spark)}/etlutil_spark_hist_bytype_"
-        + sf_dir.strip("/").replace("/", "_")
-    )
+    path = store_path(spark, "hist_bytype", sf_dir)
     bounds = geometric_bounds(100_000, 0.05)
     ensure_hist_store(
         spark, base, path, value_col="v", bounds=bounds, key_col="event_type"
@@ -16899,102 +16855,6 @@ _DRIVER_FRONT = [
     "docs_source_lorenz",
     "docs_robust_scaling",
     "docs_quality_calibration",
-]
-
-_DRIVER_FRONT_R12 = [
-    # r12 window, kept for the ledger (COVERAGE.md 'Round-12 rotation';
-    # r11 verdict items 1-3: front every query whose CODE OR ORACLE
-    # changed after its newest driver row, then the SURVEY-2 rotation
-    # block, then oldest-first re-proofs).
-    # --- (a) r11 late-bug-hunt changed-code re-proofs (verdict item 1;
-    #         commit b7c4165 landed after the r11 window ran) ---
-    "docs_weighted_sample",  # oracle changed in lockstep — highest priority
-    "docs_mixture_epoch_plan",
-    "docs_curriculum",
-    "docs_pack_token_budget",
-    "docs_length_batching",
-    "corpus_pipeline_e2e",
-    "customer_scd2_cdc_deletes",
-    "scd2_apply_incremental",
-    "scd2_customer_priority",
-    "dedup_screen_new_batch",
-    "docs_mixture_sample",
-    # --- (b) r12 MinHash-family-store rewires (verdict item 3): the six
-    #         queries now served by ensure_minhash_store ---
-    "dedup_minhash_lsh",
-    "dedup_minhash_recall",
-    "dedup_lsh_recall_by_bin",
-    "dedup_minhash_estimator_error",
-    "dedup_agreement_ari",
-    "dedup_clusters_lsh",
-    # --- (c) SURVEY-2 rotation block (verdict item 2): no reference-
-    #         surface operator row older than ~4 rounds ---
-    "op_prune_values",
-    "op_flatten_struct",
-    "op_convert_types",
-    "op_select_with_extras",
-    "op_normalize_date_fields",
-    "op_jsonify",
-    "op_clean_hash_skip_rules",
-    "op_redact_pii",
-    "date_spine_days",
-    "events_relative_month_frame",
-    # --- (d) every store query whose LAYOUT changed this round (the
-    #         delta-partitioned crash-safe postings/IVFADC upgrade) plus
-    #         the histogram-store representative — all through the new
-    #         store_root() path (verdict item 4); changed code outranks
-    #         merely-stale rows for window slots ---
-    "docs_bm25_serve",
-    "docs_bm25_serve_incremental",
-    "docs_bm25_serve_batch",
-    "docs_hybrid_serve",
-    "docs_retrieval_pipeline_serve",
-    "sim_ivfadc_serve",
-    "sim_ivfadc_serve_incremental",
-    "sim_ivfadc_serve_batch",
-    "sim_ivfadc_recall",
-    "orders_price_quantile_store",
-    # --- (e) oldest-row re-proofs: the whole r5 pool (hll_weekly_users
-    #         excluded by design: rows-only), then r6 oldest-first ---
-    "top_customers_per_segment",
-    "events_monthly",
-    "events_weekly_buckets",
-    # changed-code displacements (late r12, fourth hunt pass): clean_dict
-    # reference-parity fixes (array-of-strings truncation, EMPTY-mode
-    # truncation of kept strings, empty-container guard) and prune_data
-    # parity fixes (map-entry key removal, map-value recursion, Python
-    # bool/int cross-equality in value removal) — the remaining clean-
-    # and prune-family consumers front over the last three oldest-row
-    # slots (docs_take_n_per_lang + docs_train_eval_split +
-    # orders_monthly_price_rank roll to r13; op_clean_hash_skip_rules
-    # and op_prune_values already sit in the SURVEY-2 block)
-    "op_clean_replace_truncate",
-    "op_clean_fingerprint",
-    "op_prune_keys_depth",
-    # flatten_struct whitelist/blacklist now matches bare field names at
-    # any level (reference :1497-1501) — its second consumer fronts too
-    # (docs_stratified_sample rolls to r13)
-    "op_flatten_depth_limit",
-    # normalize_date_fields gained the container-typed-match guard
-    # (lenient rename-without-convert; strict raises) — its recursive
-    # consumer fronts (events_backfill_chunks rolls to r13)
-    "op_normalize_dates_recursive",
-    # changed-code displacements (late r12): ensure_bucketed_table now
-    # carries the source-dataset digest, and the JPEG marker walk
-    # learned fill-byte skipping — their consumers front over the last
-    # two oldest-row slots (docs_source_report + audit_fk_orphans roll
-    # to r13)
-    "multimodal_header_parse",
-    "orders_bucketed_join_stats",
-    # changed-code displacements (late r12, second hunt pass): asof_join
-    # gained NULL-time guards and interval_overlap_join moved from
-    # post-join distinct to first-common-bucket dedup — their consumers
-    # front over the last three oldest-row slots
-    # (docs_contamination_coverage / docs_contamination_bloom /
-    # docs_gopher_filter roll to r13)
-    "asof_purchase_attribution",
-    "asof_attribution_tolerance",
-    "orders_week_overlap",
 ]
 
 

@@ -214,62 +214,35 @@ def ensure_bucketed_table(
     split (r8 verdict): the catalog query is read-only in steady state
     and the write lives here, reusable by any recurring-join pipeline.
     """
-    import json
-
+    from etlutil_spark.operators.store import Store
     from etlutil_spark.operators.util import dataset_digest
 
-    jvm = spark._jvm
-    jp = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
-    base = path.rstrip("/")
-    marker = jvm.org.apache.hadoop.fs.Path(base + "/_SUCCESS")
-    spec_path = jvm.org.apache.hadoop.fs.Path(base + "/_bucket_spec.json")
+    st = Store(spark, path, "_bucket_spec.json")
     spec = {
         "bucket_by": list(bucket_by),
         "n_buckets": int(n_buckets),
         "sort_by": list(sort_by) if sort_by else [],
         "data": dataset_digest(df),
     }
-
-    def _spec_ok() -> bool:
-        if not fs.exists(spec_path):
-            return False
-        stream = fs.open(spec_path)
-        try:
-            txt = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-        try:
-            stored = json.loads(txt)
-        except ValueError:
-            return False
-        if stored == spec:
-            return True
-        # pre-r12 spec files lack the digest field: treat a match on
-        # the bucket spec alone as stale (conservative — one rebuild
-        # migrates the store to the digest-carrying format)
-        return False
-
+    # a missing, damaged or pre-r12 (digest-less) spec never matches: one
+    # rebuild migrates the store to the digest-carrying format
     if spark.catalog.tableExists(table):
-        if _spec_ok():
+        if st.read_json(st.meta_name) == spec:
             return "catalog"
         # regenerated source data (or a pre-digest store): the table's
         # files are stale — drop the metadata (external table: data dir
         # handled below) and rebuild
         spark.sql(f"DROP TABLE {table}")
-    if fs.exists(jp) and fs.exists(marker):
-        spec_ok = _spec_ok()
-        if spec_ok:
-            ddl = df._jdf.schema().toDDL()
-            sort = f" SORTED BY ({', '.join(sort_by)})" if sort_by else ""
-            spark.sql(
-                f"CREATE TABLE {table} ({ddl}) USING PARQUET "
-                f"CLUSTERED BY ({', '.join(bucket_by)}){sort} "
-                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-            )
-            return "reattached"
-    if fs.exists(jp):
-        fs.delete(jp, True)
+    if st.exists(st.marker) and st.read_json(st.meta_name) == spec:
+        ddl = df._jdf.schema().toDDL()
+        sort = f" SORTED BY ({', '.join(sort_by)})" if sort_by else ""
+        spark.sql(
+            f"CREATE TABLE {table} ({ddl}) USING PARQUET "
+            f"CLUSTERED BY ({', '.join(bucket_by)}){sort} "
+            f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
+        )
+        return "reattached"
+    st.delete()
     writer = (
         df.write.mode("overwrite")
         .bucketBy(n_buckets, *bucket_by)
@@ -278,11 +251,7 @@ def ensure_bucketed_table(
     if sort_by:
         writer = writer.sortBy(*sort_by)
     writer.saveAsTable(table)
-    out = fs.create(spec_path, True)
-    try:
-        out.write(bytearray(json.dumps(spec, sort_keys=True).encode()))
-    finally:
-        out.close()
+    st.write_meta(spec)
     return "written"
 
 

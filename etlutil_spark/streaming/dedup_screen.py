@@ -40,6 +40,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etlutil_spark.operators.store import Store
 from etlutil_spark.operators.util import pin_eager
 from pyspark.sql import functions as F
 
@@ -59,20 +60,6 @@ def _join(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
-def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API, so the corpus
-    can live on any Spark-reachable store (s3a://, gs://, hdfs://,
-    file:). ``os.path.exists`` is wrong here: it answers for the
-    DRIVER'S local filesystem only, so on an object-store corpus it is
-    always False and the cross-batch screen would silently never run —
-    every batch would screen only against itself, accepting near-dups
-    of all prior batches with no error."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
-
-
 def read_corpus(
     spark: SparkSession, corpus_path: str, *, exclude_batch: int | None = None
 ) -> tuple[DataFrame | None, DataFrame | None]:
@@ -90,7 +77,11 @@ def read_corpus(
     bit for bit."""
     docs_dir = _join(corpus_path, _DOC_SUBDIR)
     idx_dir = _join(corpus_path, _INDEX_SUBDIR)
-    if not _fs_exists(spark, docs_dir):
+    # probed through the Hadoop FS API, so the corpus can live on any
+    # Spark-reachable store: os.path.exists answers for the DRIVER'S local
+    # filesystem only, so on an object-store corpus it is always False and
+    # the cross-batch screen would silently never run
+    if not Store(spark, docs_dir).exists():
         return None, None
     docs = spark.read.parquet(docs_dir)
     index = spark.read.parquet(idx_dir)

@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etlutil_spark.operators.store import Store
 from etlutil_spark.operators.util import pin, pin_eager
 from pyspark.sql import functions as F
 
@@ -53,22 +54,14 @@ def _join(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def _latest_state_batch(
     spark: SparkSession, state_path: str, *, before: int
 ) -> int | None:
     """Newest batch id < ``before`` with persisted sketch state, probed
     through the Hadoop FileSystem API (never os.path — the dedup
     screen's object-store lesson)."""
-    fs, jdir = _fs(spark, _join(state_path, _CMS_SUBDIR))
-    if not fs.exists(jdir):
-        return None
     best = None
-    for st in fs.listStatus(jdir):
+    for st in Store(spark, _join(state_path, _CMS_SUBDIR)).listdir():
         name = st.getPath().getName()
         if not name.startswith("batch="):
             continue

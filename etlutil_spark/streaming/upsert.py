@@ -25,26 +25,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etlutil_spark.operators.store import Store
 from etlutil_spark.operators.util import pin_eager
 
 from etlutil_spark.operators.scd2 import scd2_apply, scd2_intervals
 
 
-def _fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) through the Hadoop API — the dimension may
-    live on any Spark-reachable store (s3a://, gs://, hdfs://, file:).
-    os.path/shutil answer only for the driver's local filesystem; with
-    them an object-store dimension silently reads as "absent" and every
-    batch restarts the dimension from scratch (the dedup-screen bug
-    class, r7 advice)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def read_dim(spark: SparkSession, dim_path: str) -> DataFrame | None:
-    """Current dimension, or None before the first batch."""
-    fs, jp = _fs(spark, dim_path)
-    if not fs.exists(jp):
+    """Current dimension, or None before the first batch. Probed through
+    the Hadoop FS API (any Spark-reachable store: s3a://, gs://, hdfs://,
+    file:) — os.path answers only for the driver's local filesystem, and
+    with it an object-store dimension silently reads as "absent" and
+    every batch restarts the dimension from scratch (the dedup-screen bug
+    class, r7 advice)."""
+    if not Store(spark, dim_path).exists():
         return None
     return spark.read.parquet(dim_path)
 
@@ -64,31 +58,13 @@ _BATCH_MARKER = "_scd2_batch"
 
 
 def _last_applied(spark: SparkSession, dim_path: str) -> int | None:
-    fs, jp = _fs(spark, f"{dim_path}/{_BATCH_MARKER}")
-    if not fs.exists(jp):
-        return None
+    # a damaged marker must not brick the sink: it reads as absent and the
+    # normal apply path runs (worst case is the pre-marker behavior)
+    txt = Store(spark, dim_path).try_read_text(_BATCH_MARKER)
     try:
-        stream = fs.open(jp)
-        try:
-            txt = spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
         return int(txt.strip())
-    except Exception:
-        # a damaged marker must not brick the sink: fall through to the
-        # normal apply path (worst case is the pre-marker behavior)
+    except (AttributeError, ValueError):
         return None
-
-
-def _write_marker(spark: SparkSession, tmp_dir: str, batch_id: int) -> None:
-    fs, jp = _fs(spark, f"{tmp_dir}/{_BATCH_MARKER}")
-    out = fs.create(jp, True)
-    try:
-        out.write(bytearray(str(int(batch_id)).encode()))
-    finally:
-        out.close()
 
 
 def _recover_interrupted_swap(spark: SparkSession, dim_path: str) -> None:
@@ -109,13 +85,9 @@ def _recover_interrupted_swap(spark: SparkSession, dim_path: str) -> None:
     alongside a LIVE dimension is scratch from a run that died before
     its swap began — the live dim is authoritative and the next write's
     overwrite mode replaces the scratch, so it is left alone here."""
-    fs, jdim = _fs(spark, dim_path)
-    _, jtmp = _fs(spark, dim_path + ".tmp")
-    if not fs.exists(jdim) and fs.exists(jtmp):
-        if not fs.rename(jtmp, jdim):
-            raise IOError(
-                f"recovery rename {dim_path}.tmp -> {dim_path} failed"
-            )
+    st = Store(spark, dim_path)
+    if not st.exists() and Store(spark, dim_path + ".tmp").exists():
+        st.swap_in(dim_path + ".tmp")
 
 
 def _commit_swap(
@@ -129,25 +101,16 @@ def _commit_swap(
     materialized = updated.transform(pin_eager)
     tmp = dim_path + ".tmp"
     materialized.write.mode("overwrite").parquet(tmp)
-    _write_marker(spark, tmp, batch_id)
+    Store(spark, tmp).write_text(_BATCH_MARKER, str(int(batch_id)))
     # swap through the Hadoop FS so the sink works on object stores
     # (rename is atomic on HDFS/local; on S3 it is copy+delete —
     # same "atomic-ish" caveat the module docstring already states:
     # real deployments swap this sink for a transactional format).
     # A crash between the delete and the rename is repaired by
-    # _recover_interrupted_swap at the next batch's entry.
-    fs, jdim = _fs(spark, dim_path)
-    if fs.exists(jdim):
-        fs.delete(jdim, True)
-    _, jtmp = _fs(spark, tmp)
-    # Hadoop FileSystem.rename reports most failures by RETURNING
-    # false, not raising (unlike os.rename) — and the live dim dir
-    # is already deleted above, so a silently failed swap would
-    # leave NO dimension at dim_path and the next batch's read_dim
-    # would restart SCD2 history from scratch. Fail the batch loudly
-    # instead; the checkpoint replays it against the pre-batch state.
-    if not fs.rename(jtmp, jdim):
-        raise IOError(f"rename {tmp} -> {dim_path} failed")
+    # _recover_interrupted_swap at the next batch's entry; a failed
+    # rename raises, so the checkpoint replays the batch against the
+    # pre-batch state instead of the next batch restarting history.
+    Store(spark, dim_path).swap_in(tmp)
 
 
 def scd2_upsert_batch(

@@ -17,3 +17,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def catalog_plans(spark, sf_dir) -> dict[str, str]:
+    """Executed-plan string of every catalog query at ``sf_dir``, built
+    once in ``sorted(QUERIES)`` order and shared by the catalog-wide plan
+    guards (cartesian joins, row-at-a-time Python)."""
+    from etlutil_spark.plans.inspect import formatted_plan
+    from etlutil_spark.queries import QUERIES
+
+    return {
+        name: formatted_plan(fn(spark, sf_dir))
+        for name, fn in sorted(QUERIES.items())
+    }

@@ -778,13 +778,12 @@ class TestHeadlinePlanBudgets:
 
 
 class TestCatalogPythonEval:
-    def test_no_row_at_a_time_python_in_catalog(self, spark, sf_dir):
+    def test_no_row_at_a_time_python_in_catalog(self, catalog_plans):
         """BatchEvalPython (pickled row-at-a-time UDF) is banned across
         the whole catalog; Arrow-vectorized Python is allowed only for
         the multimodal family (decode/feature UDFs have no JVM form)."""
         offenders = {}
-        for name, fn in sorted(QUERIES.items()):
-            plan = P.formatted_plan(fn(spark, sf_dir))
+        for name, plan in catalog_plans.items():
             bad = []
             if "BatchEvalPython" in plan:
                 bad.append("BatchEvalPython")

@@ -642,15 +642,11 @@ class TestCatalogPlanGuards:
         "dedup_threshold_sweep",
 }
 
-    def test_no_accidental_cartesian_joins(self, spark, sf_dir):
-        from etlutil_spark.plans.inspect import formatted_plan
-        from etlutil_spark.queries import QUERIES
-
+    def test_no_accidental_cartesian_joins(self, catalog_plans):
         offenders = {}
-        for name, fn in sorted(QUERIES.items()):
+        for name, plan in catalog_plans.items():
             if name in self.ALLPAIRS_OK:
                 continue
-            plan = formatted_plan(fn(spark, sf_dir))
             ops = ("CartesianProduct", "BroadcastNestedLoopJoin")
             if name in self.SCALAR_BNLJ_OK:
                 ops = ("CartesianProduct",)

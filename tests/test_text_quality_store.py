@@ -66,6 +66,17 @@ class TestQualityStore:
             fh.write('{"params": {"trunc')  # crash-torn sidecar
         assert ensure_quality_store(spark, d, path) == "written"
 
+    def test_gopher_default_change_rebuilds(self, spark, tmp_path, monkeypatch):
+        # the stored rule thresholds come from the operator's signature, so
+        # changing a default can never serve verdicts from the old rule set
+        d = _docs(spark, tmp_path)
+        path = str(tmp_path / "qstore")
+        assert ensure_quality_store(spark, d, path) == "written"
+        assert ensure_quality_store(spark, d, path) == "reused"
+        kw = {**gopher_quality_filter.__kwdefaults__, "min_tokens": 31}
+        monkeypatch.setattr(gopher_quality_filter, "__kwdefaults__", kw)
+        assert ensure_quality_store(spark, d, path) == "written"
+
     def test_in_memory_input_always_rebuilds(self, spark, tmp_path):
         # per-call sentinel digest: no silent stale serving for inputs
         # without a content identity
